@@ -487,7 +487,7 @@ def embedding_drift(
     if kernel not in ("mmd", "energy"):
         raise ValueError(f"kernel must be 'mmd' or 'energy', got {kernel!r}")
     stat_col = kernel  # output column carries the chosen statistic's name
-    out_schema = (
+    result_ddl = (
         f"window_id int, n_rows long, n_vectors long, {stat_col} double, "
         "threshold double, verdict string"
     )
@@ -532,7 +532,7 @@ def embedding_drift(
 
     pruned = df.select(F.col(window_col).alias("window_id"), vec_col)
     sampled = _bounded_window_sample(pruned, "window_id", sample_cap)
-    return sampled.groupBy("window_id").applyInPandas(score, out_schema)
+    return sampled.groupBy("window_id").applyInPandas(score, result_ddl)
 
 
 def categorical_drift(

@@ -49,7 +49,7 @@ def smooth_labels(
     """Grouped-map smoothing: order within group is explicit (never relies on
     physical row order — SURVEY.md §7 hard part (c))."""
 
-    out_schema = f"{group_col} long, {order_col} long, {label_col} int, label_smooth int"
+    result_ddl = f"{group_col} long, {order_col} long, {label_col} int, label_smooth int"
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(order_col).reset_index(drop=True)
@@ -68,5 +68,5 @@ def smooth_labels(
     return (
         df.select(group_col, order_col, label_col)
         .groupBy(group_col)
-        .applyInPandas(fn, out_schema)
+        .applyInPandas(fn, result_ddl)
     )

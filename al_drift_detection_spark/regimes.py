@@ -84,7 +84,7 @@ def window_sketches(
     n_cols = len(value_cols)
     pt = dict(df.dtypes)[part_col]
     wt = dict(df.dtypes)[window_col]
-    out_schema = f"`{part_col}` {pt}, `{window_col}` {wt}, " + ", ".join(
+    result_ddl = f"`{part_col}` {pt}, `{window_col}` {wt}, " + ", ".join(
         f"`{c}` array<double>" for c in value_cols
     )
     stacked = df.select(
@@ -135,7 +135,7 @@ def window_sketches(
             row.append(out)
         return pd.DataFrame([row], columns=[part_col, window_col, *value_cols])
 
-    return counts.groupBy(part_col, window_col).applyInPandas(fold, out_schema)
+    return counts.groupBy(part_col, window_col).applyInPandas(fold, result_ddl)
 
 
 def _sketchify(sample: np.ndarray, q: int) -> np.ndarray:
@@ -273,9 +273,8 @@ def assign_drift_regimes(
     for r in sk_rows:
         # percentile over an all-NULL window group returns NULL — normalize to
         # an EMPTY sketch so ks_2samp yields (0.0, 1.0) and the window inherits
-        # the current regime, exactly like the streaming form
-        # (stateful_regimes builds np.empty(0) for valueless batches); without
-        # this np.asarray(None) is a 0-d nan array and searchsorted raises
+        # the current regime; without this np.asarray(None) is a 0-d nan
+        # array and searchsorted raises
         cur_sketch = {
             c: np.asarray(r[c] if r[c] is not None else [], dtype=np.float64)
             for c in value_cols

@@ -31,9 +31,10 @@ Iceberg/file feed and skips it — the query graphs are identical.
 
 Scale shape: staging is one repartition("_b") write (one task per window,
 one file per window — O(windows) renames driver-side, no data through the
-driver); the four verdict streams share the pre-reduced closed-window
-plans whose per-trigger state input is O(chunks) partials, not raw rows
-(streaming/closed.py module docstring). References are the same
+driver); every verdict family runs the pre-reduced closed-window plan
+(streaming/closed.closed_multi) whose per-trigger state input is O(chunks)
+partials, not raw rows — one query per family (run_closed_streams) or one
+query for all of them (run_closed_streams_combined). References are the same
 deterministic batch references (window_id < ref_windows) the batch pass
 uses — a window's verdict never depends on other windows or on micro-batch
 boundaries.
@@ -273,8 +274,8 @@ def _w_bucket_col(w_lo: float, w_hi: float):
 
 def stream_specs(refs: dict, cat_cols: list[str]) -> list:
     """The CLI stream's verdict families as ClosedSpecs — ONE config list
-    shared verbatim by the share-nothing path (run_closed_streams) and the
-    single-scan combined path (run_closed_streams_combined), so the two
+    shared verbatim by the share-nothing mode (run_closed_streams) and the
+    single-scan combined mode (run_closed_streams_combined), so the two
     modes cannot diverge on thresholds, universes, or references. Spec
     names are the sink directory names."""
     from al_drift_detection_spark.streaming import closed as C
@@ -352,13 +353,9 @@ def _stream_state_partitions(
     queries divide the session's shuffle-partition budget, floor 4 (the
     fold stays parallel; a deployment with orders of magnitude more
     in-flight windows per trigger raises the session's
-    spark.sql.shuffle.partitions — or sets
-    SPARK_GRAFT_STREAM_STATE_PARTITIONS — and this scales with it).
-    Returns None when the budget is unparseable (leave the conf alone).
+    spark.sql.shuffle.partitions and this scales with it). Returns None
+    when the budget is unparseable (leave the conf alone).
     """
-    env = os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS")
-    if env:
-        return max(1, int(env))
     try:
         budget = int(spark.conf.get("spark.sql.shuffle.partitions"))
     except Exception:
@@ -389,6 +386,46 @@ class _state_partition_conf:
         return False
 
 
+def _closed_feed(
+    spark: SparkSession,
+    stage_dir: str,
+    refs: dict,
+    specs: list,
+    window_seconds: int,
+    watermark: str,
+    files_per_trigger: int,
+    slide_seconds: int | None,
+) -> DataFrame:
+    """closed_multi over a fresh read of the staged feed: the generic
+    verdict frame for `specs` (streaming/closed.py)."""
+    from al_drift_detection_spark.streaming.closed import closed_multi
+
+    src = _with_bucket(
+        spark.readStream.schema(STAGE_DDL)
+        .option("maxFilesPerTrigger", files_per_trigger)
+        .parquet(stage_dir),
+        refs,
+    )
+    return closed_multi(
+        src, "ts", specs,
+        window=f"{window_seconds} seconds", watermark=watermark,
+        slide=f"{slide_seconds} seconds" if slide_seconds else None,
+    )
+
+
+def _start_sink(df: DataFrame, out_dir: str, name: str):
+    """availableNow parquet sink at {out_dir}/{name}, checkpointed under
+    {out_dir}/stream_ckpt/{name}."""
+    return (
+        df.writeStream.outputMode("append")
+        .format("parquet")
+        .option("path", f"{out_dir}/{name}")
+        .option("checkpointLocation", f"{out_dir}/stream_ckpt/{name}")
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
 def run_closed_streams(
     spark: SparkSession,
     stage_dir: str,
@@ -402,50 +439,40 @@ def run_closed_streams(
 ) -> dict[str, int]:
     """Run the closed-window verdict streams over the staged feed with
     parquet sinks + checkpoints, availableNow-bounded; returns per-table
-    emitted-window row counts. Each query reads the file source
-    independently (share-nothing), so a failed sink resumes from its own
-    checkpoint without touching the others — the streaming analog of the
-    batch checkpoint's per-partition resume. N families therefore cost N
-    corpus scans; run_closed_streams_combined is the single-scan mode."""
-    from al_drift_detection_spark.streaming.closed import _run_spec
-
-    window = f"{window_seconds} seconds"
-    slide = f"{slide_seconds} seconds" if slide_seconds else None
-
-    def src():
-        return _with_bucket(
-            spark.readStream.schema(STAGE_DDL)
-            .option("maxFilesPerTrigger", files_per_trigger)
-            .parquet(stage_dir),
-            refs,
-        )
+    emitted-window row counts. SHARE-NOTHING mode: each family is its own
+    query — `split_closed(closed_multi(feed, [spec]), spec)` — reading the
+    file source independently, so a failed sink resumes from its own
+    checkpoint without touching the others (the streaming analog of the
+    batch checkpoint's per-partition resume). The stateful function is the
+    combined mode's, keyed by (_check, window). N families cost N corpus
+    scans; run_closed_streams_combined is the single-scan mode."""
+    from al_drift_detection_spark.streaming.closed import split_closed
 
     specs = stream_specs(refs, cat_cols)
-    outs = {
-        spec.name: _run_spec(src(), "ts", spec, window, watermark, slide)
-        for spec in specs
-    }
-
     # N concurrent queries share the shuffle-partition budget — see
     # _stream_state_partitions (the conf is read at first-batch planning,
     # so it wraps the starts AND the awaits; availableNow queries terminate
     # inside the block)
     with _state_partition_conf(spark, len(specs)):
-        queries = []
-        for name, df in outs.items():
-            queries.append(
-                df.writeStream.outputMode("append")
-                .format("parquet")
-                .option("path", f"{out_dir}/{name}")
-                .option("checkpointLocation", f"{out_dir}/stream_ckpt/{name}")
-                .trigger(availableNow=True)
-                .start()
+        queries = [
+            _start_sink(
+                split_closed(
+                    _closed_feed(
+                        spark, stage_dir, refs, [spec], window_seconds,
+                        watermark, files_per_trigger, slide_seconds,
+                    ),
+                    spec,
+                ),
+                out_dir, spec.name,
             )
+            for spec in specs
+        ]
         for q in queries:
             q.awaitTermination()
 
     return {
-        name: spark.read.parquet(f"{out_dir}/{name}").count() for name in outs
+        spec.name: spark.read.parquet(f"{out_dir}/{spec.name}").count()
+        for spec in specs
     }
 
 
@@ -474,42 +501,26 @@ def run_closed_streams_combined(
     Trade-off vs share-nothing: one checkpoint for all families (a poison
     row in one family halts the whole pass instead of one sink), which is
     the price of N× fewer corpus scans and triggers at 100 TB."""
-    from al_drift_detection_spark.streaming.closed import closed_multi, split_closed
+    from al_drift_detection_spark.streaming.closed import split_closed
 
     specs = stream_specs(refs, cat_cols)
-    src = _with_bucket(
-        spark.readStream.schema(STAGE_DDL)
-        .option("maxFilesPerTrigger", files_per_trigger)
-        .parquet(stage_dir),
-        refs,
-    )
-    generic = closed_multi(
-        src, "ts", specs,
-        window=f"{window_seconds} seconds", watermark=watermark,
-        slide=f"{slide_seconds} seconds" if slide_seconds else None,
+    generic = _closed_feed(
+        spark, stage_dir, refs, specs, window_seconds, watermark,
+        files_per_trigger, slide_seconds,
     )
     # ONE query, HALF the shuffle-partition budget (n_concurrent=2 in the
-    # _stream_state_partitions formula; SPARK_GRAFT_STREAM_STATE_PARTITIONS
-    # still overrides): the dispatcher's per-trigger input is KB-sized
-    # partials, so per-partition fixed costs (task launch + fresh Python
-    # worker + state-store commit, every trigger) dominate — but unlike a
-    # share-nothing query it folds EVERY family's state, so it needs more
-    # width than budget//N. Measured A/B (identical verdict rows),
-    # stream-only wall: 10M rows/5000 windows — 32 parts 212.6 s,
+    # _stream_state_partitions formula): the dispatcher's per-trigger input
+    # is KB-sized partials, so per-partition fixed costs (task launch +
+    # fresh Python worker + state-store commit, every trigger) dominate —
+    # but unlike a share-nothing query it folds EVERY family's state, so it
+    # needs more width than budget//N. Measured A/B (identical verdict
+    # rows), stream-only wall: 10M rows/5000 windows — 32 parts 212.6 s,
     # 16 → 151.3 s, 8 → 176.9 s; 1M rows/500 windows — 32 → 31.5 s,
     # 16 → 18-21 s, 8 → 20-23 s, 4 → 31-35 s. budget//2 is the optimum at
     # both scales and stays scale-adaptive (follows
     # spark.sql.shuffle.partitions on a cluster).
     with _state_partition_conf(spark, 2):
-        q = (
-            generic.writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", f"{out_dir}/stream_combined")
-            .option("checkpointLocation", f"{out_dir}/stream_ckpt/stream_combined")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        _start_sink(generic, out_dir, "stream_combined").awaitTermination()
 
     gen = spark.read.parquet(f"{out_dir}/stream_combined")
     counts = {}

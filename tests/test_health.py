@@ -201,84 +201,89 @@ def test_runner_health_surfaces(spark, tmp_path_factory):
 
 
 def test_stream_health_matches_batch(spark, tmp_path_factory):
-    """Windows fully contained in one micro-batch get exactly the batch
-    volume/completeness verdicts (fixed literal references — the
-    deterministic-reference rule), and replaying with a fresh checkpoint
-    does not duplicate rows (idempotent batch_id partitions)."""
+    """Closed-window volume/completeness and uniqueness, run together in ONE
+    closed_multi query over a feed with one file per window, give exactly
+    the batch verdicts for every window (fixed literal references — the
+    deterministic-reference rule)."""
+    import time
+
+    import pandas as pd
+
     from al_drift_detection_spark.functions.health import (
         completeness_drift,
+        uniqueness_drift,
         volume_anomaly,
     )
-    from al_drift_detection_spark.streaming.validate import stream_health
+    from al_drift_detection_spark.streaming.closed import (
+        closed_multi,
+        split_closed,
+        window_health_spec,
+        window_uniqueness_spec,
+    )
 
-    base = tmp_path_factory.mktemp("stream_health")
-    inp, out, ckpt = str(base / "in"), str(base / "out"), str(base / "ckpt")
-
-    rows = []
+    inp = str(tmp_path_factory.mktemp("stream_health") / "in")
+    base = pd.Timestamp("2026-01-01 00:00:00")
+    frames = []
     for w, n in [(0, 100), (1, 100), (2, 100), (3, 40)]:  # window 3: volume drop
-        for i in range(n):
-            a = None if (w == 3 and i < 12) else float(i)  # +30% nulls there
-            rows.append((w, a))
-    df = spark.createDataFrame(rows, "window_id int, a double")
-    df.repartition("window_id").write.partitionBy("window_id").parquet(inp)
+        frames.append(pd.DataFrame({
+            "ts": [base + pd.Timedelta(seconds=300 * w + 2 * i) for i in range(n)],
+            "window_id": w,
+            # +30% nulls in window 3 (also a uniqueness drop: nulls excluded)
+            "a": [None if (w == 3 and i < 12) else float(i) for i in range(n)],
+        }))
+    sentinel = pd.DataFrame(
+        {"ts": [base + pd.Timedelta(hours=1)], "window_id": [99], "a": [0.0]}
+    )
+    ddl = "ts timestamp, window_id long, a double"
+    for i, pdf in enumerate(frames + [sentinel]):  # one file = one micro-batch
+        spark.createDataFrame(pdf, ddl).coalesce(1).write.mode(
+            "append" if i else "overwrite"
+        ).parquet(inp)
+        time.sleep(0.05)
 
-    refs = {"a": 0.0}
-    q = stream_health(
-        spark, inp, "a double, window_id int", 100.0, refs, out, ckpt,
-        uniqueness_col="a", ref_uniqueness=1.0,
-        max_files_per_trigger=1,
+    health = window_health_spec(100.0, {"a": 0.0})
+    uniq = window_uniqueness_spec("a", ref_ratio=1.0)
+    stream = (
+        spark.readStream.schema(ddl).option("maxFilesPerTrigger", 1).parquet(inp)
     )
-    q.awaitTermination(120)
+    q = (
+        closed_multi(stream, "ts", [health, uniq], "5 minutes", "1 minute")
+        .writeStream.outputMode("append").format("memory")
+        .queryName("stream_health_out").trigger(availableNow=True).start()
+    )
+    q.awaitTermination(180)
+    gen = spark.table("stream_health_out")
+    wid = ((F.unix_timestamp("window_start") - F.unix_timestamp(F.lit(base)))
+           / 300).cast("long").alias("window_id")
 
-    got_v = (
-        spark.read.parquet(f"{out}/volume")
-        .select("window_id", "n_rows", "ratio", "verdict")
-        .toPandas().set_index("window_id").sort_index()
-    )
-    exp_v = (
-        volume_anomaly(df, ref_mean=100.0)
-        .toPandas().set_index("window_id").sort_index()
-    )
+    def got(spec, check=None):
+        df = split_closed(gen, spec)
+        if check:
+            df = df.filter(F.col("check") == check)
+        return df.select(wid, "*").toPandas().set_index("window_id").sort_index()
+
+    df = spark.createDataFrame(pd.concat(frames), ddl).drop("ts")
+
+    def exp(frame):
+        return frame.toPandas().set_index("window_id").sort_index()
+
+    got_v, exp_v = got(health, "volume"), exp(volume_anomaly(df, ref_mean=100.0))
+    assert got_v.index.tolist() == [0, 1, 2, 3]
     assert got_v["verdict"].tolist() == exp_v["verdict"].tolist()
-    assert (got_v["ratio"] == exp_v["ratio"]).all()
+    assert np.allclose(got_v["metric"], exp_v["ratio"])
     assert got_v.loc[3, "verdict"] == "fail" and got_v.loc[0, "verdict"] == "pass"
 
-    got_c = (
-        spark.read.parquet(f"{out}/completeness")
-        .select("window_id", "null_ratio", "delta", "verdict")
-        .toPandas().set_index("window_id").sort_index()
-    )
-    exp_c = (
-        completeness_drift(df, ["a"], ref_ratios=refs)
-        .toPandas().set_index("window_id").sort_index()
-    )
+    got_c = got(health, "completeness")
+    exp_c = exp(completeness_drift(df, ["a"], ref_ratios={"a": 0.0}))
     assert got_c["verdict"].tolist() == exp_c["verdict"].tolist()
-    assert np.allclose(got_c["null_ratio"], exp_c["null_ratio"])
+    assert np.allclose(got_c["metric"], exp_c["null_ratio"])
     assert got_c.loc[3, "verdict"] == "fail"
 
-    # uniqueness leg: same operator, fixed reference → parity with batch
-    from al_drift_detection_spark.functions.health import uniqueness_drift
-
-    got_u = (
-        spark.read.parquet(f"{out}/uniqueness")
-        .select("window_id", "ratio", "verdict")
-        .toPandas().set_index("window_id").sort_index()
-    )
-    exp_u = (
-        uniqueness_drift(df, "a", ref_ratio=1.0)
-        .toPandas().set_index("window_id").sort_index()
-    )
+    got_u = got(uniq)
+    exp_u = exp(uniqueness_drift(df, "a", ref_ratio=1.0, approx=False))
     assert got_u["verdict"].tolist() == exp_u["verdict"].tolist()
-    assert got_u.loc[3, "verdict"] == "fail"  # 12 nulls of 40 → ratio ~0.7
-
-    # replay with a fresh checkpoint: same batch_ids overwrite, no dup rows
-    n_once = spark.read.parquet(f"{out}/volume").count()
-    q2 = stream_health(
-        spark, inp, "a double, window_id int", 100.0, refs, out,
-        str(base / "ckpt2"), max_files_per_trigger=1,
-    )
-    q2.awaitTermination(120)
-    assert spark.read.parquet(f"{out}/volume").count() == n_once
+    assert got_u["n_distinct"].tolist() == exp_u["n_distinct"].tolist()
+    assert got_u.loc[3, "verdict"] == "fail"  # 28 distinct of 40 → ratio 0.7
 
 
 def test_schema_check_golden(spark):

@@ -303,78 +303,107 @@ def analyzed_of(df) -> str:
     return df._jdf.queryExecution().analyzed().toString()
 
 
-def test_streaming_closed_plans_are_pre_reduced(spark):
-    """Every closed-window builder's stateful node must sit above the
-    `_pre_ts` MapInPandas pre-reducer — and the check is non-vacuous (the
-    marker is actually present, so a silent rename breaks the test, not the
-    audit)."""
-    import numpy as np
+# every family's sink schema — split_fields applied to GEN_OUT_SCHEMA is the
+# only place it is defined, so a slot or cast slip changes a sink silently
+_W = "window_start timestamp, window_end timestamp, "
+CLOSED_SINK_DDL = {
+    "cat_drift": _W + "n long, chi2_stat double, dof long, p_value double, "
+    "verdict string",
+    "health": _W + "check string, column string, n_rows long, metric double, "
+    "ref double, verdict string",
+    "drift": _W + "n_rows long, column string, kernel string, "
+    "statistic double, p_value double, threshold double, verdict string",
+    "uniqueness": _W + "n_rows long, n_distinct long, ratio double, "
+    "ref_ratio double, verdict string",
+    "quantiles": _W + "q double, quantile double, n_total long",
+    "association": _W + "n long, mi double, ref_mi double, abs_diff double, "
+    "cramers_v double, verdict string",
+    "referential": _W + "n long, orphans long, rate double, ref_rate double, "
+    "verdict string",
+    "frequent": _W + "item string, est long, rank int, n_rows long",
+    "sliced": _W + "slice string, n_cur long, psi double, rank int, "
+    "verdict string",
+    "cond_completeness": _W + "category string, n_cur long, "
+    "null_ratio double, ref_ratio double, delta double, verdict string",
+    "embedding_outliers": _W + "n long, n_outliers long, rate double, "
+    "threshold double, expected_rate double, verdict string",
+}
 
-    from al_drift_detection_spark.streaming.closed import (
-        closed_association_drift,
-        closed_cat_drift,
-        closed_conditional_completeness,
-        closed_embedding_outliers,
-        closed_referential_drift,
-        closed_drift_scores,
-        closed_sliced_drift,
-        closed_window_health,
-        closed_window_quantiles,
-        closed_window_uniqueness,
-    )
+
+def test_streaming_closed_plans_are_pre_reduced(spark):
+    """Every closed-window family, run alone as the share-nothing driver
+    runs it (split_closed over a one-spec closed_multi), must put its
+    stateful node above the `_pre_ts` MapInPandas pre-reducer — and the
+    check is non-vacuous (the marker is actually present, so a silent
+    rename breaks the test, not the audit). Each family's split schema
+    equals its literal sink DDL."""
+    import numpy as np
+    from pyspark.sql.types import _parse_datatype_string
+
+    from al_drift_detection_spark.streaming import closed as C
 
     s = _rate_stream(spark)
-    builds = {
-        "closed_cat_drift": closed_cat_drift(s, "ts", "fmt", {"a": 0.5, "b": 0.5}),
-        "closed_window_health": closed_window_health(
-            s, "ts", ref_volume=100.0, ref_null_ratios={"caption": 0.3}
-        ),
-        "closed_drift_scores": closed_drift_scores(
-            s, "ts", ["v"], {"v": np.arange(100.0)}
-        ),
-        "closed_window_uniqueness": closed_window_uniqueness(
-            s, "ts", "image_id", ref_ratio=0.9
-        ),
-        "closed_window_quantiles": closed_window_quantiles(
-            s, "ts", "v", 0.0, 100.0, [0.5], n_bins=16
-        ),
-        "closed_association_drift": closed_association_drift(
-            s, "ts", "fmt", "caption", ["a", "b"], ["c"], ref_mi=0.0
-        ),
-        "closed_referential_drift": closed_referential_drift(
-            s, "ts", "image_id",
-            spark.createDataFrame([("0",)], "k string"), ref_rate=0.0,
-        ),
-        "closed_sliced_drift": closed_sliced_drift(
-            s, "ts", "v", "fmt",
+    emb = s.selectExpr("ts", "array(v, v + 1.0) AS embedding")
+    specs = [
+        (s, C.cat_drift_spec("fmt", {"a": 0.5, "b": 0.5})),
+        (s, C.window_health_spec(ref_volume=100.0,
+                                 ref_null_ratios={"caption": 0.3})),
+        (s, C.drift_scores_spec(["v"], {"v": np.arange(100.0)})),
+        (s, C.window_uniqueness_spec("image_id", ref_ratio=0.9)),
+        (s, C.window_quantiles_spec("v", 0.0, 100.0, [0.5], n_bins=16)),
+        (s, C.association_drift_spec("fmt", "caption", ["a", "b"], ["c"],
+                                     ref_mi=0.0)),
+        (s, C.referential_drift_spec(
+            "image_id", spark.createDataFrame([("0",)], "k string"),
+            ref_rate=0.0,
+        )),
+        (s, C.frequent_items_spec("fmt")),
+        (s, C.sliced_drift_spec(
+            "v", "fmt",
             {"lo": 0.0, "hi": 100.0, "bins": 4,
              "universe": ["a", "b", "(other)"],
              "pr": {"a": [0.25] * 4, "b": [0.25] * 4,
                     "(other)": [0.25] * 4}},
-        ),
-        "closed_conditional_completeness": closed_conditional_completeness(
-            s, "ts", "fmt", "caption",
+        )),
+        (s, C.conditional_completeness_spec(
+            "fmt", "caption",
             {"universe": ["a", "b", "(other)"],
              "ratios": {"a": 0.3, "b": 0.3, "(other)": 0.0}},
-        ),
-        "closed_embedding_outliers": closed_embedding_outliers(
-            s.selectExpr("ts", "array(v, v + 1.0) AS embedding"),
-            "ts", "embedding", [[1.0, 0.0], [0.0, 1.0]], threshold=0.9,
-        ),
-    }
-    for name, df in builds.items():
+        )),
+        (emb, C.embedding_outliers_spec(
+            "embedding", [[1.0, 0.0], [0.0, 1.0]], threshold=0.9,
+        )),
+    ]
+    assert sorted(spec.name for _, spec in specs) == sorted(CLOSED_SINK_DDL)
+    for stream, spec in specs:
+        df = C.split_closed(C.closed_multi(stream, "ts", [spec]), spec)
         p = analyzed_of(df)
+        name = spec.name
         assert re.search(r"MapInPandas .*_pre_ts#\d+", p), f"{name}: no pre-reducer"
         assert not audit_streaming_stateful(p), f"{name}: {audit_streaming_stateful(p)}"
+        want = _parse_datatype_string(CLOSED_SINK_DDL[name])
+        assert df.schema.simpleString() == want.simpleString(), name
 
 
 def test_streaming_stateful_by_part_passes_audit(spark):
-    """stateful_drift keys by `part` — a bounded physical unit (the orbit
-    rule), not an ingest window — and must NOT be flagged."""
-    s = _rate_stream(spark).selectExpr("CAST(v AS INT) % 8 AS part", "v")
-    from al_drift_detection_spark.streaming.stateful_drift import stateful_drift
+    """A stateful op keyed by `part` — a bounded physical unit (the orbit
+    rule), not an ingest window — must NOT be flagged even with no
+    pre-reducer under it (the audit's negative case; the raw-window funnel
+    below is the positive one)."""
+    import pandas as pd
+    from pyspark.sql.streaming.state import GroupStateTimeout
 
-    assert not audit_streaming_stateful(analyzed_of(stateful_drift(s, ["v"])))
+    s = _rate_stream(spark).selectExpr("CAST(v AS INT) % 8 AS part", "v")
+
+    def fn(key, pdfs, state):
+        yield pd.DataFrame({"n": [0]})
+
+    by_part = s.groupBy("part").applyInPandasWithState(
+        fn, "n long", "n long", "append", GroupStateTimeout.NoTimeout
+    )
+    plan = analyzed_of(by_part)
+    assert "FlatMapGroupsInPandasWithState" in plan
+    assert not audit_streaming_stateful(plan)
 
 
 def test_streaming_audit_catches_raw_funnel(spark):

@@ -6,71 +6,6 @@ import pytest
 from pyspark.sql import functions as F
 
 
-def test_streaming_suite_runs_batches(spark, tmp_path_factory):
-    from al_drift_detection_spark import suite as S
-    from al_drift_detection_spark.streaming.validate import stream_suite
-
-    base = tmp_path_factory.mktemp("stream")
-    inp, out, ckpt = str(base / "in"), str(base / "out"), str(base / "ckpt")
-
-    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet").withColumn(
-        "part", (F.col("event_id") % 4).cast("int")
-    )
-    ev.repartition(4).write.parquet(inp)
-
-    suite = S.CheckSuite(
-        checks=[S.not_null("event_type"), S.between("value", -1e6, 1e6)],
-        part_col="part",
-        row_id_col="event_id",
-    )
-    q = stream_suite(spark, inp, ev.schema, suite, out, ckpt, max_files_per_trigger=2)
-    q.awaitTermination(120)
-    verd = spark.read.parquet(out)
-    assert verd.count() > 0
-    assert {"check_name", "verdict", "batch_id"} <= set(verd.columns)
-    # multiple micro-batches processed (maxFilesPerTrigger=2 over 4 files)
-    assert verd.select("batch_id").distinct().count() >= 2
-    assert verd.filter(F.col("verdict") == "fail").count() == 0
-
-
-def test_streaming_window_stats_matches_batch(spark, tmp_path_factory):
-    from al_drift_detection_spark.streaming.validate import streaming_window_stats
-
-    base = tmp_path_factory.mktemp("stream2")
-    inp = str(base / "in")
-    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    ev.write.parquet(inp)
-
-    stream = spark.readStream.schema(ev.schema).parquet(inp)
-    agg = streaming_window_stats(stream, "ts", "value", window="1 hour", watermark="2 hours")
-    q = (
-        agg.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("winstats")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = spark.sql("SELECT * FROM winstats").toPandas()
-
-    exp = (
-        ev.groupBy(F.window("ts", "1 hour"))
-        .agg(F.count(F.lit(1)).alias("n"), F.round(F.avg("value"), 6).alias("avg_v"))
-        .toPandas()
-    )
-    # append mode only emits windows the watermark has closed; all emitted
-    # rows must match the batch computation exactly
-    assert len(got) > 0
-    exp_map = {
-        (r["window"]["start"], r["window"]["end"]): (r["n"], r["avg_v"])
-        for _, r in exp.iterrows()
-    }
-    for _, r in got.iterrows():
-        key = (r["window_start"], r["window_end"])
-        assert key in exp_map
-        assert (r["n"], r["avg_v"]) == exp_map[key]
-
-
 def test_image_features_and_resize(spark):
     from al_drift_detection_spark.datagen import generate_images
     from al_drift_detection_spark.functions.multimodal import image_features, resize_images
@@ -205,55 +140,60 @@ def test_salted_agg_matches_plain(spark):
 
 
 def test_stream_cat_drift_matches_batch(spark, tmp_path_factory):
-    """A window fully contained in one micro-batch must get exactly the batch
-    categorical_drift verdict (identical engine code both paths)."""
+    """Every window of a feed with one file per window gets exactly the
+    batch categorical_drift verdict and statistic from the closed-window
+    cat-drift spec (split_closed over a one-spec closed_multi)."""
+    import time
+
+    import numpy as np
+    import pandas as pd
+
     from al_drift_detection_spark.drift import categorical_drift
-    from al_drift_detection_spark.streaming.validate import stream_cat_drift
+    from al_drift_detection_spark.streaming.closed import (
+        cat_drift_spec,
+        closed_multi,
+        split_closed,
+    )
 
-    base = tmp_path_factory.mktemp("stream3")
-    inp, out, ckpt = str(base / "in"), str(base / "out"), str(base / "ckpt")
-
-    rows = []
+    inp = str(tmp_path_factory.mktemp("stream3") / "in")
+    base = pd.Timestamp("2026-01-01 00:00:00")
     # window 0 matches the 60/40 reference; window 1 is webp-shifted
-    rows += [(0, "png")] * 60 + [(0, "jpeg")] * 40
-    rows += [(1, "png")] * 30 + [(1, "jpeg")] * 20 + [(1, "webp")] * 50
-    df = spark.createDataFrame(rows, "window_id int, fmt string")
-    # one file per window → each micro-batch holds whole windows
-    df.repartition("window_id").write.partitionBy("window_id").parquet(inp)
+    fmts = [["png"] * 60 + ["jpeg"] * 40,
+            ["png"] * 30 + ["jpeg"] * 20 + ["webp"] * 50]
+    frames = [
+        pd.DataFrame({
+            "ts": [base + pd.Timedelta(seconds=300 * w + i) for i in range(len(f))],
+            "window_id": w,
+            "fmt": f,
+        })
+        for w, f in enumerate(fmts)
+    ]
+    sentinel = pd.DataFrame(
+        {"ts": [base + pd.Timedelta(hours=1)], "window_id": [99], "fmt": ["png"]}
+    )
+    ddl = "ts timestamp, window_id long, fmt string"
+    for i, pdf in enumerate(frames + [sentinel]):  # one file = one micro-batch
+        spark.createDataFrame(pdf, ddl).coalesce(1).write.mode(
+            "append" if i else "overwrite"
+        ).parquet(inp)
+        time.sleep(0.05)
 
     props = {"png": 0.6, "jpeg": 0.4}
-    q = stream_cat_drift(
-        spark, inp, "fmt string, window_id int", "fmt", props, out, ckpt,
-        max_files_per_trigger=1,
+    spec = cat_drift_spec("fmt", props)
+    stream = (
+        spark.readStream.schema(ddl).option("maxFilesPerTrigger", 1).parquet(inp)
     )
-    q.awaitTermination(120)
-
-    got = (
-        spark.read.parquet(out)
-        .select("window_id", "n", "chi2_stat", "dof", "p_value", "verdict")
-        .toPandas().set_index("window_id").sort_index()
+    q = (
+        split_closed(closed_multi(stream, "ts", [spec], "5 minutes", "1 minute"), spec)
+        .writeStream.outputMode("append").format("memory")
+        .queryName("stream_cat_out").trigger(availableNow=True).start()
     )
+    q.awaitTermination(180)
+    got = spark.table("stream_cat_out").orderBy("window_start").toPandas()
     exp = (
-        categorical_drift(df, "fmt", props)
-        .toPandas().set_index("window_id").sort_index()
+        categorical_drift(spark.createDataFrame(pd.concat(frames), ddl), "fmt", props)
+        .orderBy("window_id").toPandas()
     )
-    assert got["verdict"].tolist() == exp["verdict"].tolist()
-    assert got.loc[1]["verdict"] == "fail" and got.loc[0]["verdict"] == "pass"
-    import numpy as np
-    assert np.allclose(got["chi2_stat"], exp["chi2_stat"])
-    assert (got["dof"] == exp["dof"]).all()
-
-    # REPLAY idempotency (ADVICE r3): re-processing the same batches (fresh
-    # checkpoint, same batch_ids) must overwrite each batch's partition, not
-    # append duplicate verdict rows
-    n_once = spark.read.parquet(out).count()
-    q2 = stream_cat_drift(
-        spark, inp, "fmt string, window_id int", "fmt", props, out,
-        str(base / "ckpt2"), max_files_per_trigger=1,
-    )
-    q2.awaitTermination(120)
-    replayed = spark.read.parquet(out)
-    assert replayed.count() == n_once
-    assert (
-        replayed.groupBy("batch_id", "window_id").count().filter("count > 1").count() == 0
-    )
+    assert got["verdict"].tolist() == exp["verdict"].tolist() == ["pass", "fail"]
+    assert got["n"].tolist() == exp["n"].tolist()
+    assert np.allclose(got["chi2_stat"], exp["chi2_stat"], rtol=1e-9)
